@@ -392,8 +392,8 @@ class Bundles(spark: SparkSession, basePath: String,
       // partition, dropping the WHOLE series (the remove set recomputed
       // per attempt from the rebased parent) serializes after it
       StoreLog.withWriterLease(path) { lease =>
-        TsStore.commitTransformWithRebase(path, lease, curV,
-          moved = Seq.empty, replaced = Seq(partPrefix),
+        TsStore.commitTransformWithRebase(StoreTxn.empty(path, Some(lease)),
+          curV, replaced = Seq(partPrefix),
           removeFilesOf = seriesFiles,
           abortOnAppendsUnder = false,
           abortOnReplaced = false)

@@ -146,75 +146,30 @@ private[sources] class GraftBatchWriteExec(path: String, staging: String,
     // (torn footers, duplicate rows); those die with the staging dir
     val named = messages.toSeq.collect {
       case GraftWriteTaskResult(fs) => fs }.flatten
-    StoreLog.withWriterLease(path) { lease =>
-      val moved =
-        try StoreLog.adoptStagedNamed(path, staging, named)
-        finally StoreLog.deleteStaging(staging)
-      val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved)
-      var committed = false
-      var attempts = 0
-      while (!committed) {
-        lease.renew()
-        val curV0 = StoreLog.latestVersion(path)
-        if (curV0.isEmpty) { StoreLog.ensure(path); () } // first-ever commit
-        val curV = curV0.getOrElse(StoreLog.latestVersion(path).get)
+    StoreTxn.staged(path, staging, Some(named)) { txn =>
+      val base = StoreLog.latestVersion(path).getOrElse { // first-ever commit
+        StoreLog.ensure(path); StoreLog.latestVersion(path).get }
+      txn.commit(base) { curV =>
         val curProps = StoreLog.propsAt(path, curV)
         // a CHECK constraint added while this INSERT was in flight —
         // the written rows were guarded against the set bound at
         // write-build; abort rather than commit unchecked rows after
         // the constraint's whole-table certification
-        val addedChecks = Constraints.addedSince(boundSet, curProps)
-        if (addedChecks.nonEmpty) {
-          StoreLog.deleteDataFiles(path, moved)
-          throw new StoreLog.CommitConflict(
-            s"CHECK constraint(s) ${addedChecks.map(_.name).mkString(", ")} " +
-              s"added concurrently at $path — re-run the INSERT")
-        }
-        // an OVERWRITE is a versioned REPLACE: only the new files live,
-        // every touched partition named in `replaced` (concurrent
-        // writers' rebase checks look for theirs there — the restore
-        // pattern); an APPEND is a pure addition that rebases cleanly.
-        // Appends are REF-AWARE (under an active branch the base is the
-        // MAIN view's files and the commit advances the main pin) and
-        // take the O(commit) transform path when branchless; OVERWRITE
-        // replaces a view wholesale and refuses while a branch is open.
-        if (truncate && curProps.contains(StoreLog.MainRefProp)) {
-          StoreLog.deleteDataFiles(path, moved)
-          throw new IllegalStateException(
+        txn.abortIfChecksAdded(boundSet, curProps, "re-run the INSERT")
+        // an OVERWRITE is a versioned REPLACE of the whole store and
+        // refuses while a branch is open; an APPEND is a pure addition
+        // that rebases cleanly ([[TsStore.stagedAppend]])
+        if (truncate && curProps.contains(StoreLog.MainRefProp))
+          txn.refuse(new IllegalStateException(
             s"store at $path has open branch(es) — INSERT OVERWRITE " +
-              "refuses while a branch is open; publish or drop it first")
-        }
-        try {
-          if (!truncate && !curProps.contains(StoreLog.MainRefProp))
-            StoreLog.commitTransform(path, curV, Seq.empty,
-              removeFiles = Nil, addFiles = moved,
-              addStats = movedStats, addSizes = movedSizes)
-          else {
-            val cur = StoreLog.read(path, curV)
-            val (baseFiles, refProps, carryStats, carrySizes, dvReset) =
-              TsStore.refAppendBase(path, cur, None)
-            val (replaced, files) =
-              if (truncate)
-                ((cur.files ++ moved).map { f =>
-                  val i = f.lastIndexOf('/')
-                  if (i > 0) f.substring(0, i) else f
-                }.distinct.sorted, moved)
-              else (Seq.empty[String], baseFiles ++ moved)
-            StoreLog.commit(path, cur.version, replaced, files,
-              parent = Some(cur), addStats = carryStats ++ movedStats,
-              addSizes = carrySizes ++ movedSizes,
-              resetDvs = if (truncate) None else dvReset,
-              // an OVERWRITE redefines the whole store with canonically
-              // sorted files — (re)establish the layout-order contract;
-              // an append's sorted additions just inherit the parent's
-              setProps =
-                (if (truncate) Map(GraftTable.LayoutSortedProp -> "true")
-                 else Map.empty[String, String]) ++ refProps)
-          }
-          committed = true
-        } catch {
-          case c: StoreLog.CommitConflict =>
-            attempts += 1; if (attempts > 50) throw c
+              "refuses while a branch is open; publish or drop it first"))
+        // an OVERWRITE redefines the whole store with canonically sorted
+        // files — (re)establish the layout-order contract; an append's
+        // sorted additions just inherit the parent's
+        TsStore.stagedAppend(txn, curV, curProps, branch = None,
+            replaceAll = truncate, tag = None) { _ =>
+          if (truncate) Map(GraftTable.LayoutSortedProp -> "true")
+          else Map.empty
         }
       }
     }

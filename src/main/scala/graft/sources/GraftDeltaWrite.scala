@@ -258,8 +258,8 @@ private[sources] class GraftDeltaBatchWrite(path: String, staging: String,
         // transform commit: pure file additions + vector changes — no
         // parent file list materializes however many files the store
         // has; a concurrent REPLACE of a touched partition still aborts
-        TsStore.commitTransformWithRebase(path, lease, base.version,
-          moved, prefixes,
+        TsStore.commitTransformWithRebase(
+          new StoreTxn(path, Some(lease), moved), base.version, prefixes,
           removeFilesOf = _ => Nil, abortOnAppendsUnder = false,
           boundChecks = boundSet, addDvs = entries)
         ()

@@ -117,16 +117,12 @@ private[sources] class GraftReplaceDataWrite(path: String,
           val i = f.lastIndexOf('/')
           if (i > 0) f.substring(0, i) else f
         }.distinct.sorted
-        StoreLog.withWriterLease(path) { lease =>
-          val moved =
-            try StoreLog.adoptStagedNamed(path, staging, named)
-            finally StoreLog.deleteStaging(staging)
-          if (removed.isEmpty && moved.isEmpty) ()
+        StoreTxn.staged(path, staging, Some(named)) { txn =>
+          if (removed.isEmpty && txn.moved.isEmpty) ()
           else {
             // transform commit: swap exactly the operation's planned
             // files for the rewrites — no parent file list materializes
-            TsStore.commitTransformWithRebase(path, lease, base.version,
-              moved, prefixes,
+            TsStore.commitTransformWithRebase(txn, base.version, prefixes,
               removeFilesOf = _ => removed,
               abortOnAppendsUnder = false,
               // UPDATE/MERGE rewrites carry mutated/inserted values the

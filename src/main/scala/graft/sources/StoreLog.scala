@@ -1320,8 +1320,8 @@ object StoreLog {
 
   /** Atomically publish the next version after `expectedVersion` (0 =
     * creating a fresh log). Returns the committed version. Fails with
-    * [[CommitConflict]] if another writer got there first — the caller
-    * decides whether a rebase is sound.
+    * [[CommitConflict]] if another writer got there first — whether a
+    * rebase is sound is decided by the retrying [[StoreTxn]] body.
     *
     * When `parent` is the resolved snapshot at `expectedVersion` (the
     * caller holds it anyway — it computed `files` from it) and the new

@@ -295,61 +295,17 @@ object TsStore {
           .map(v => StoreLog.bloomColsAt(path, v)).getOrElse(Nil)
       writeFiles(sorted, staging, uidCols, SaveMode.Overwrite, codec,
         rowGroupBytes, maxRecordsPerFile, appendBlooms)
-      StoreLog.withWriterLease(path) { lease =>
-        val moved =
-          try StoreLog.adoptStaged(path, staging)
-          finally StoreLog.deleteStaging(staging)
-        val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved,
-          digestCols = Some(appendBlooms))
-        var committed = false
-        var attempts = 0
-        while (!committed) {
-          lease.renew()
-          val curV = StoreLog.latestVersion(path).get // exists() held above
+      StoreTxn.staged(path, staging, digestCols = Some(appendBlooms)) { txn =>
+        txn.commit(StoreLog.latestVersion(path).get) { curV => // exists() held above
           val curProps = StoreLog.propsAt(path, curV)
           // a CHECK constraint added since this append bound its guard
           // set means the staged rows were never validated against it —
           // abort rather than commit unchecked rows AFTER the
           // constraint's whole-table certification (see
           // [[Constraints.addedSince]]; the CAS totally orders us)
-          val added = Constraints.addedSince(appendChecks, curProps)
-          if (added.nonEmpty) {
-            StoreLog.deleteDataFiles(path, moved)
-            throw new StoreLog.CommitConflict(
-              s"CHECK constraint(s) ${added.map(_.name).mkString(", ")} added " +
-                s"concurrently at $path — re-run the append")
-          }
-          try {
-            if (branch.isEmpty && !curProps.contains(StoreLog.MainRefProp))
-              // branchless HOT PATH: a pure addition commits O(its own
-              // footprint) — no parent snapshot ever materializes
-              // ([[StoreLog.commitTransform]]; the writer-side twin of
-              // the stripe-lazy read on million-file stores)
-              StoreLog.commitTransform(path, curV, Seq.empty,
-                removeFiles = Nil, addFiles = moved,
-                addStats = movedStats, addSizes = movedSizes,
-                tag = commitTag,
-                setProps = GraftTable.widenedSchemaProp(curProps, dfW.schema))
-            else {
-              // REF-AWARE base: under an active branch the tip's file
-              // list may be the OTHER ref's view — resolve the target
-              // ref's files and advance its pointer in the same commit
-              val cur = StoreLog.read(path, curV)
-              val (baseFiles, refProps, carryStats, carrySizes, dvReset) =
-                TsStore.refAppendBase(path, cur, branch)
-              StoreLog.commit(path, cur.version, Seq.empty, baseFiles ++ moved,
-                parent = Some(cur), addStats = carryStats ++ movedStats,
-                addSizes = carrySizes ++ movedSizes,
-                tag = commitTag,
-                resetDvs = dvReset,
-                setProps =
-                  GraftTable.widenedSchemaProp(cur.props, dfW.schema) ++ refProps)
-            }
-            committed = true
-          } catch {
-            case c: StoreLog.CommitConflict =>
-              attempts += 1; if (attempts > 50) throw c
-          }
+          txn.abortIfChecksAdded(appendChecks, curProps, "re-run the append")
+          stagedAppend(txn, curV, curProps, branch, replaceAll = false,
+            commitTag)(GraftTable.widenedSchemaProp(_, dfW.schema))
         }
       }
     } else writeFiles(sorted, path, uidCols, mode, codec, rowGroupBytes,
@@ -559,22 +515,34 @@ object TsStore {
       .filter(col("__rn") === 1).drop("__rn", "__src")
   }
 
-  /** The O(COMMIT-FOOTPRINT) twin of [[commitWithRebase]] for
-    * PARTITION-REPLACING writes (upsert): the commit is expressed as a
-    * TRANSFORM — remove everything under the touched `prefixes`, add
-    * `moved` — so neither the base snapshot nor any rebased parent ever
-    * materializes (the remove set streams per attempt through
-    * [[StoreLog.foldFiles]] with row-group-skipped prefixes, and the
-    * conflict walk reads intervening RAW manifests: `replaced` overlap
-    * or delta adds under our prefixes abort exactly like the
-    * materializing scaffold; a checkpoint-cadence intervening version —
-    * whose raw manifest carries no diff — falls back to one full
-    * set-diff for that version only). The writer-side fix for the
+  /** The O(COMMIT-FOOTPRINT) commit for PARTITION-REPLACING writes
+    * (upsert, deletes, dv takedowns, maintenance): the commit is
+    * expressed as a TRANSFORM — remove everything under the touched
+    * `prefixes`, add the txn's adopted files — so neither the base
+    * snapshot nor any rebased parent ever materializes (the remove set
+    * streams per attempt through [[StoreLog.foldFiles]] with
+    * row-group-skipped prefixes, and a lost CAS walks the intervening
+    * RAW manifests — [[StoreTxn.conflictWalk]]: `replaced` overlap or
+    * delta adds under our prefixes abort). The writer-side fix for the
     * million-file store's per-upsert driver cost.
+    *
+    * REPLACING verbs refuse while a branch is open: each computed its
+    * rewrite against ONE view's files, and committing it would corrupt
+    * whichever ref it didn't read (the tip zig-zags between views under
+    * branching). Appends have their own ref-aware bodies; branch-
+    * targeted DML commits through [[branchDmlCommit]], maintenance
+    * through [[commitMaintenanceRewrite]].
+    *
+    * `boundChecks` (row-ADDING paths only — upsert, DML inserts, cow
+    * UPDATE/MERGE rewrites): the CHECK constraint set the writer's
+    * per-row guard was bound against at write start; each attempt aborts
+    * if a constraint appeared since ([[StoreTxn.abortIfChecksAdded]]).
+    * Maintenance rewrites and pure deletes pass None: they add no rows a
+    * new constraint could reject (survivors were certified by the ADD
+    * scan itself).
     */
-  private[sources] def commitTransformWithRebase(path: String,
-      lease: StoreLog.WriterLease, baseVersion: Long,
-      moved: Seq[String], replaced: Seq[String],
+  private[sources] def commitTransformWithRebase(txn: StoreTxn,
+      baseVersion: Long, replaced: Seq[String],
       removeFilesOf: Long => Seq[String],
       abortOnAppendsUnder: Boolean,
       schemaForWiden: Option[org.apache.spark.sql.types.StructType] = None,
@@ -587,75 +555,28 @@ object TsStore {
       // of the replaced-overlap abort
       abortOnReplaced: Boolean = true,
       tag: Option[String] = None): Long = {
-    def abort(why: String): Nothing = {
-      StoreLog.deleteDataFiles(path, moved)
-      throw new StoreLog.CommitConflict(why)
-    }
-    def under(f: String): Boolean = replaced.exists(p => f.startsWith(p + "/"))
-    val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved)
-    var expectedV = baseVersion
-    var attempts = 0
-    while (true) {
-      lease.renew()
-      val props = StoreLog.propsAt(path, expectedV)
+    val path = txn.path
+    txn.commit(baseVersion,
+        txn.conflictWalk(replaced, abortOnReplaced, abortOnAppendsUnder)) { v =>
+      val props = StoreLog.propsAt(path, v)
       if (props.contains(StoreLog.MainRefProp))
-        abort(s"store at $path has an active branch " +
+        txn.abort(s"store at $path has an active branch " +
           s"(${StoreLog.branches(path).keys.mkString(", ")}) — " +
           "replacing operations refuse while a branch is open; publish " +
           "or drop it first (appends — and branch-targeted upsert / " +
           "deleteVectors — may still run)")
-      boundChecks.foreach { bc =>
-        val added = Constraints.addedSince(bc, props)
-        if (added.nonEmpty)
-          abort(s"CHECK constraint(s) ${added.map(_.name).mkString(", ")} " +
-            s"added concurrently at $path — the staged rows were never " +
-            "validated against them; re-run the write")
-      }
-      try {
-        return StoreLog.commitTransform(path, expectedV, replaced,
-          removeFilesOf(expectedV), moved,
-          addStats = movedStats, addSizes = movedSizes, addDvs = addDvs,
-          tag = tag,
-          setProps = schemaForWiden.fold(Map.empty[String, String])(sc =>
-            GraftTable.widenedSchemaProp(props, sc)) ++ extraProps)
-      } catch {
-        case c: StoreLog.CommitConflict =>
-          attempts += 1
-          if (attempts > 20)
-            abort(s"gave up after $attempts commit attempts at $path: ${c.getMessage}")
-          val curV = StoreLog.latestVersion(path).getOrElse(throw c)
-          ((expectedV + 1) to curV).foreach { v =>
-            val conflict =
-              try {
-                if (abortOnReplaced &&
-                    StoreLog.replacedAt(path, v).exists(replaced.contains))
-                  Some("replaced")
-                else if (!abortOnAppendsUnder) None
-                else StoreLog.rawDelta(path, v) match {
-                  case Some((add, _, _)) =>
-                    if (add.exists(under)) Some("appended into") else None
-                  case None =>
-                    // checkpoint-cadence version: no raw diff — one full
-                    // set comparison for this version only
-                    val cur = StoreLog.read(path, v).files.toSet
-                    val prev = StoreLog.read(path, v - 1).files.toSet
-                    if ((cur -- prev).exists(under)) Some("appended into")
-                    else None
-                }
-              } catch {
-                case _: IllegalArgumentException =>
-                  abort(s"manifest v$v pruned by a concurrent vacuum at " +
-                    s"$path — re-run against the new base")
-              }
-            conflict.foreach(kind =>
-              abort(s"concurrent writer $kind ${replaced.mkString(",")} at " +
-                s"$path — re-run the operation against the new base"))
-          }
-          expectedV = curV
-      }
+      boundChecks.foreach(txn.abortIfChecksAdded(_, props, NotValidated))
+      StoreLog.commitTransform(path, v, replaced, removeFilesOf(v), txn.moved,
+        addStats = txn.movedStats, addSizes = txn.movedSizes, addDvs = addDvs,
+        tag = tag,
+        setProps = schemaForWiden.fold(Map.empty[String, String])(sc =>
+          GraftTable.widenedSchemaProp(props, sc)) ++ extraProps)
     }
-    sys.error("unreachable")
   }
+
+  /** Abort advice of a row-adding commit that met a newer constraint. */
+  private val NotValidated =
+    "the staged rows were never validated against them; re-run the write"
 
   /** The MAINTENANCE-rewrite commit ([[compactPartitions]] / [[zorder]]):
     * swap `targets` (live files of the MAIN view) for `moved`. With no
@@ -693,30 +614,24 @@ object TsStore {
       replaced: Seq[String], targets: Seq[String],
       extraProps: Map[String, String] = Map.empty,
       tag: Option[String] = None): Long = {
-    def abort(why: String): Nothing = {
-      StoreLog.deleteDataFiles(path, moved)
-      throw new StoreLog.CommitConflict(why)
-    }
+    val txn = new StoreTxn(path, Some(lease), moved)
     val tipV0 = StoreLog.latestVersion(path)
-      .getOrElse(abort(s"no manifest at $path"))
+      .getOrElse(txn.abort(s"no manifest at $path"))
     if (!StoreLog.propsAt(path, tipV0).contains(StoreLog.MainRefProp))
-      return commitTransformWithRebase(path, lease, baseViewV, moved,
-        replaced, removeFilesOf = _ => targets,
+      return commitTransformWithRebase(txn, baseViewV, replaced,
+        removeFilesOf = _ => targets,
         abortOnAppendsUnder = false, extraProps = extraProps, tag = tag)
-    val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved)
     val targetSet = targets.toSet
     // the deletion-vector state the rewrite MATERIALIZED (it read live
     // rows as of baseViewV) — resolved once, only if the branch path
     // engages; the branchless path's conflict walk covers this itself
     lazy val baseDvs = StoreLog.read(path, baseViewV).dvs
-    var attempts = 0
-    while (true) {
-      lease.renew()
-      val cur = StoreLog.latest(path).getOrElse(abort(s"no manifest at $path"))
+    val (committed, plans) = txn.commit(tipV0) { tipV =>
+      val cur = StoreLog.read(path, tipV)
       if (!cur.props.contains(StoreLog.MainRefProp))
         // every branch closed mid-verb: the rewrite was computed under
         // assumptions a publish/drop may have invalidated — re-run
-        abort(s"branches at $path closed mid-rewrite — re-run the " +
+        txn.abort(s"branches at $path closed mid-rewrite — re-run the " +
           "maintenance pass against the new state")
       val mv = cur.props(StoreLog.MainRefProp).toLong
       val mSnap = if (mv == cur.version) cur else StoreLog.read(path, mv)
@@ -725,7 +640,7 @@ object TsStore {
       // or delete means ours was computed from superseded files (pure
       // appends simply join the view and survive untouched)
       if (!targets.forall(mLive))
-        abort(s"concurrent writer replaced rewrite targets at $path — " +
+        txn.abort(s"concurrent writer replaced rewrite targets at $path — " +
           "re-run the maintenance pass against the new base")
       // …and must carry the SAME deletion vectors it had when the pass
       // read its rows: a takedown landing on a target after baseViewV
@@ -734,7 +649,7 @@ object TsStore {
       // replaced file's vector dies with it. Parquet files never mutate,
       // so dv state is the only way a live target's content can drift.
       if (!targets.forall(f => mSnap.dvs.get(f) == baseDvs.get(f)))
-        abort(s"deletion vectors changed on rewrite targets at $path " +
+        txn.abort(s"deletion vectors changed on rewrite targets at $path " +
           "since the pass read them — re-run the maintenance pass " +
           "against the new base")
       // per-branch disjointness proofs against the CURRENT pins
@@ -751,11 +666,11 @@ object TsStore {
         else if (overlap == targets.size) {
           val dvEq = targets.forall(f => mSnap.dvs.get(f) == bSnap.dvs.get(f))
           if (!dvEq)
-            abort(s"branch '$b' at $path holds diverging deletion " +
+            txn.abort(s"branch '$b' at $path holds diverging deletion " +
               "vectors on the rewrite's files — publish or drop it first")
           (b, bv, true)
         } else
-          abort(s"branch '$b' at $path genuinely overlaps the rewrite " +
+          txn.abort(s"branch '$b' at $path genuinely overlaps the rewrite " +
             s"($overlap of ${targets.size} files shared) — publish or " +
             "drop it first")
       }
@@ -785,158 +700,53 @@ object TsStore {
         if (mv == cur.version)
           (Map.empty[String, FileStats.FileStatsMap], Map.empty[String, Long])
         else (mSnap.stats, mSnap.sizes)
-      val committed =
-        try StoreLog.commit(path, cur.version, replaced, newMain,
-          parent = Some(cur), addStats = carryStats ++ movedStats,
-          addSizes = carrySizes ++ movedSizes, tag = tag,
-          resetDvs = dvReset,
-          setProps = extraProps ++ baseAdv +
-            (StoreLog.MainRefProp -> v.toString))
-        catch {
-          case c: StoreLog.CommitConflict =>
-            attempts += 1
-            if (attempts > 20)
-              abort(s"gave up after $attempts commit attempts at $path: " +
-                c.getMessage)
-            -1L
-        }
-      if (committed >= 0) {
-        plans.foreach { case (b, bv, rebase) =>
-          if (rebase) rebaseBranchPin(path, lease, b, bv, targetSet, moved,
-            movedStats, movedSizes)
-        }
-        return committed
-      }
+      (StoreLog.commit(path, cur.version, replaced, newMain,
+        parent = Some(cur), addStats = carryStats ++ txn.movedStats,
+        addSizes = carrySizes ++ txn.movedSizes, tag = tag,
+        resetDvs = dvReset,
+        setProps = extraProps ++ baseAdv +
+          (StoreLog.MainRefProp -> v.toString)), plans)
     }
-    sys.error("unreachable")
+    plans.foreach { case (b, bv, rebase) =>
+      if (rebase) rebaseBranchPin(lease, txn, b, bv, targetSet)
+    }
+    committed
   }
 
   /** Rebase branch `b`'s pin through a maintenance rewrite's file
-    * mapping (targets → moved) — the follow-up commit after
-    * [[commitMaintenanceRewrite]]'s main commit. BEST-EFFORT: a pin
-    * that moved or vanished since the proof was taken is left alone
-    * (the concurrent branch writer's view still references the old
-    * targets, which stay vacuum-live through its pin), and a CAS storm
-    * gives up quietly — correctness never depends on this commit.
+    * mapping (targets → the `main` txn's files) — the follow-up commit
+    * after [[commitMaintenanceRewrite]]'s main commit. Its own txn
+    * adopts nothing: main's commit already NAMED the files, so no abort
+    * here may delete them. BEST-EFFORT: a pin that moved or vanished
+    * since the proof was taken is left alone (the concurrent branch
+    * writer's view still references the old targets, which stay
+    * vacuum-live through its pin), and a CAS storm gives up quietly —
+    * correctness never depends on this commit.
     */
-  private def rebaseBranchPin(path: String, lease: StoreLog.WriterLease,
-      b: String, bv0: Long, targetSet: Set[String], moved: Seq[String],
-      movedStats: Map[String, FileStats.FileStatsMap],
-      movedSizes: Map[String, Long]): Unit = {
-    var tries = 0
-    while (tries <= 20) {
-      lease.renew()
-      val cur = StoreLog.latest(path).getOrElse(return)
-      val bvNow = cur.props.get(StoreLog.BranchPropPrefix + b)
-        .flatMap(_.toLongOption).getOrElse(return)
-      if (bvNow != bv0) return
-      val bSnap = if (bvNow == cur.version) cur else StoreLog.read(path, bvNow)
-      val newB = bSnap.files.filterNot(targetSet) ++ moved
-      val liveB = newB.toSet
-      val desiredB = bSnap.dvs.filter { case (f, _) => liveB(f) }
-      val inheritedB = cur.dvs.filter { case (f, _) => liveB(f) }
-      val dvResetB = if (inheritedB == desiredB) None else Some(desiredB)
-      try {
-        StoreLog.commit(path, cur.version, Seq.empty, newB,
-          parent = Some(cur),
-          addStats = bSnap.stats ++ movedStats,
-          addSizes = bSnap.sizes ++ movedSizes,
-          resetDvs = dvResetB,
-          setProps = Map(
-            StoreLog.BranchPropPrefix + b -> (cur.version + 1).toString))
-        return
-      } catch {
-        case _: StoreLog.CommitConflict => tries += 1
-      }
+  private def rebaseBranchPin(lease: StoreLog.WriterLease, main: StoreTxn,
+      b: String, bv0: Long, targetSet: Set[String]): Unit = {
+    val path = main.path
+    StoreLog.latestVersion(path).foreach { tipV0 =>
+      try StoreTxn.empty(path, Some(lease)).commit(tipV0) { tipV =>
+        val cur = StoreLog.read(path, tipV)
+        if (cur.props.get(StoreLog.BranchPropPrefix + b)
+            .flatMap(_.toLongOption).contains(bv0)) {
+          val bSnap = if (bv0 == cur.version) cur else StoreLog.read(path, bv0)
+          val newB = bSnap.files.filterNot(targetSet) ++ main.moved
+          val liveB = newB.toSet
+          val desiredB = bSnap.dvs.filter { case (f, _) => liveB(f) }
+          val inheritedB = cur.dvs.filter { case (f, _) => liveB(f) }
+          val dvResetB = if (inheritedB == desiredB) None else Some(desiredB)
+          StoreLog.commit(path, cur.version, Seq.empty, newB,
+            parent = Some(cur),
+            addStats = bSnap.stats ++ main.movedStats,
+            addSizes = bSnap.sizes ++ main.movedSizes,
+            resetDvs = dvResetB,
+            setProps = Map(
+              StoreLog.BranchPropPrefix + b -> (cur.version + 1).toString))
+        }
+      } catch { case _: StoreLog.CommitConflict => () }
     }
-  }
-
-  /** The leased adopt-then-commit retry scaffold shared by [[upsert]]
-    * and [[delete]]: renew the lease, try the CAS commit, and on a loss
-    * walk every intervening commit — abort (deleting the adopted files)
-    * if any makes a rebase `unsound`, otherwise retry on the winner's
-    * snapshot. `newFiles` recomputes the commit's file list from the
-    * rebased parent; `unsound(s, prevFiles)` sees each intervening
-    * snapshot with its parent's file set (so append detection works)
-    * and returns the abort reason if the rebase cannot serialize.
-    *
-    * `boundChecks` (row-ADDING paths only — upsert, DML inserts, cow
-    * UPDATE/MERGE rewrites): the CHECK constraint set the writer's
-    * per-row guard was bound against at write start. Each attempt
-    * re-reads the (rebased) parent's props and aborts if a constraint
-    * appeared since ([[Constraints.addedSince]]) — the staged rows were
-    * never validated against it, and committing them would break the
-    * whole-table invariant `ALTER ... ADD`'s existing-data scan just
-    * certified. Maintenance rewrites and pure deletes pass None: they
-    * add no rows a new constraint could reject (survivors were
-    * certified by the ADD scan itself).
-    */
-  private[sources] def commitWithRebase(path: String, lease: StoreLog.WriterLease,
-      base: StoreLog.Snapshot, moved: Seq[String], replaced: Seq[String],
-      newFiles: StoreLog.Snapshot => Seq[String],
-      unsound: (StoreLog.Snapshot, Set[String]) => Option[String],
-      setProps: StoreLog.Snapshot => Map[String, String] = _ => Map.empty,
-      addDvs: Map[String, Dv.Entry] = Map.empty,
-      boundChecks: Option[Seq[Constraints.Check]] = None): Long = {
-    def abort(why: String): Nothing = {
-      StoreLog.deleteDataFiles(path, moved)
-      throw new StoreLog.CommitConflict(why)
-    }
-    // footer-read the new files' column bounds ONCE, outside the retry
-    // loop — the commit they ride into carries the planner's index for
-    // them (see FileStats)
-    val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved)
-    var expected = base
-    var attempts = 0
-    var done = -1L
-    while (done < 0) {
-      lease.renew()
-      // REPLACING verbs refuse while a branch is open: every caller of
-      // this scaffold computed its rewrite against ONE view's files,
-      // and committing it would corrupt whichever ref it didn't read
-      // (the tip zig-zags between views under branching). Appends — the
-      // write-audit-publish ingest shape — have their own ref-aware
-      // loops; publish-or-drop reopens the rest.
-      if (expected.props.contains(StoreLog.MainRefProp))
-        abort(s"store at $path has an active branch " +
-          s"(${StoreLog.branches(path).keys.mkString(", ")}) — " +
-          "replacing operations refuse while a branch is open; publish " +
-          "or drop it first (appends — and branch-targeted upsert / " +
-          "deleteVectors — may still run)")
-      boundChecks.foreach { bc =>
-        val added = Constraints.addedSince(bc, expected.props)
-        if (added.nonEmpty)
-          abort(s"CHECK constraint(s) ${added.map(_.name).mkString(", ")} " +
-            s"added concurrently at $path — the staged rows were never " +
-            "validated against them; re-run the write")
-      }
-      try done = StoreLog.commit(path, expected.version, replaced,
-        newFiles(expected), parent = Some(expected), addStats = movedStats,
-        addSizes = movedSizes, setProps = setProps(expected), addDvs = addDvs)
-      catch {
-        case c: StoreLog.CommitConflict =>
-          attempts += 1
-          if (attempts > 20)
-            abort(s"gave up after $attempts commit attempts at $path: ${c.getMessage}")
-          val cur = StoreLog.latest(path).getOrElse(throw c)
-          var prevFiles = expected.files.toSet
-          ((expected.version + 1) to cur.version).foreach { v =>
-            // a concurrent vacuum may have pruned the intervening
-            // manifests out from under the walk — that is a clean
-            // conflict (adopted files cleaned up, caller re-runs),
-            // not a raw missing-manifest error
-            val snap =
-              try StoreLog.read(path, v)
-              catch { case _: IllegalArgumentException =>
-                abort(s"manifest v$v pruned by a concurrent vacuum at $path " +
-                  "— re-run against the new base") }
-            unsound(snap, prevFiles).foreach(abort)
-            prevFiles = snap.files.toSet
-          }
-          expected = cur
-      }
-    }
-    done
   }
 
   /** Partition-pruned MERGE (latest-wins upsert) into a TsStore layout —
@@ -1043,10 +853,7 @@ object TsStore {
         .sortWithinPartitions(rangeCols: _*),
       staging, uidCols, SaveMode.Overwrite, codec, rowGroupBytes,
       maxRecordsPerFile, StoreLog.bloomColsAt(path, baseV))
-    StoreLog.withWriterLease(path) { lease =>
-      val moved =
-        try StoreLog.adoptStaged(path, staging)
-        finally StoreLog.deleteStaging(staging)
+    StoreTxn.staged(path, staging) { txn =>
       // the touched partition DIRECTORY prefixes — the unit of replacement
       // and of writer-vs-writer conflict detection — are read off the
       // STAGED OUTPUT's own directory names: Spark's partition-path
@@ -1054,7 +861,7 @@ object TsStore {
       // single source of truth, so a hand-built String.valueOf rendering
       // can never silently disagree with the directories the base files
       // actually live under (it would for e.g. timestamp uid columns).
-      val prefixes: Set[String] = moved.map { f =>
+      val prefixes: Set[String] = txn.moved.map { f =>
         val i = f.lastIndexOf('/')
         require(i > 0, s"staged upsert file '$f' is not under a partition directory")
         f.substring(0, i)
@@ -1066,8 +873,7 @@ object TsStore {
       // manifests — O(commit footprint), never the store
       branch match {
         case Some(b) =>
-          branchDmlCommit(path, lease, b, branchPin.get, moved,
-            prefixes.toSeq,
+          branchDmlCommit(txn, b, branchPin.get, prefixes.toSeq,
             // the upsert REPLACES whole touched partitions: its merged
             // output covers every base row of those prefixes
             removeOf = bs => bs.files.filter(f =>
@@ -1076,7 +882,7 @@ object TsStore {
             boundChecks = Some(boundChecks),
             schemaForWiden = Some(delta.schema))
         case None =>
-          commitTransformWithRebase(path, lease, baseV, moved, prefixes.toSeq,
+          commitTransformWithRebase(txn, baseV, prefixes.toSeq,
             // the exact remove set at each attempt's base: live files under
             // the touched prefixes, streamed (never the whole store)
             removeFilesOf = v => StoreLog.foldFiles(path, v, prefixes.toSeq)(
@@ -1192,25 +998,18 @@ object TsStore {
         .sortWithinPartitions(rangeCols: _*),
       staging, uidCols, SaveMode.Overwrite, codec, rowGroupBytes,
       maxRecordsPerFile, base.bloomCols)
-    StoreLog.withWriterLease(path) { lease =>
-      val moved =
-        try StoreLog.adoptStaged(path, staging)
-        finally StoreLog.deleteStaging(staging)
-      // rebase is sound unless an intervening commit REPLACED one of
-      // our partitions (our affected files may no longer be live);
-      // pure appends under them serialize after this delete cleanly
+    StoreTxn.staged(path, staging) { txn =>
       // transform commit: remove exactly the affected files, add the
       // rewrites — no parent file list materializes; a concurrent
       // REPLACE of a touched partition aborts (its `replaced` record),
       // pure appends under it serialize after this delete cleanly
       branch match {
         case Some(b) =>
-          branchDmlCommit(path, lease, b, base.version, moved,
-            prefixes.toSeq, removeOf = _ => affected,
+          branchDmlCommit(txn, b, base.version, prefixes.toSeq,
+            removeOf = _ => affected,
             addDvs = Map.empty, boundChecks = None, schemaForWiden = None)
         case None =>
-          commitTransformWithRebase(path, lease, base.version, moved,
-            prefixes.toSeq,
+          commitTransformWithRebase(txn, base.version, prefixes.toSeq,
             removeFilesOf = _ => affected,
             abortOnAppendsUnder = false)
       }
@@ -1433,14 +1232,14 @@ object TsStore {
             // branch-targeted takedown: the vectors land on the BRANCH
             // view only (invisible to main; exact dv reset keeps the
             // refs' states from cross-leaking on later zig-zag commits)
-            branchDmlCommit(path, lease, b, base.version, moved = Nil,
-              prefixes = prefixes, removeOf = _ => Nil, addDvs = entries,
+            branchDmlCommit(StoreTxn.empty(path, Some(lease)), b,
+              base.version, prefixes, removeOf = _ => Nil, addDvs = entries,
               boundChecks = None, schemaForWiden = None)
           case None =>
             // dv-only transform: no file moves, no parent file list — the
             // commit is O(changed vectors) however many files the store has
-            commitTransformWithRebase(path, lease, base.version,
-              moved = Nil, replaced = prefixes,
+            commitTransformWithRebase(StoreTxn.empty(path, Some(lease)),
+              base.version, replaced = prefixes,
               removeFilesOf = _ => Nil, abortOnAppendsUnder = false,
               addDvs = entries)
         }
@@ -1806,16 +1605,12 @@ object TsStore {
         .sortWithinPartitions(rangeCols: _*),
       staging, uidCols, SaveMode.Overwrite, codec, rowGroupBytes,
       maxRecordsPerFile, base.bloomCols)
-    StoreLog.withWriterLease(path) { lease =>
-      val moved =
-        try StoreLog.adoptStaged(path, staging)
-        finally StoreLog.deleteStaging(staging)
+    StoreTxn.staged(path, staging) { txn =>
       // transform commit: remove exactly the affected files, add the
       // rewrites — no parent file list materializes; a concurrent
       // REPLACE of a touched partition aborts (its `replaced` record),
       // pure appends under it serialize after this delete cleanly
-      commitTransformWithRebase(path, lease, base.version, moved,
-        prefixes.toSeq,
+      commitTransformWithRebase(txn, base.version, prefixes.toSeq,
         removeFilesOf = _ => affected,
         abortOnAppendsUnder = false)
     }
@@ -2940,22 +2735,57 @@ object TsStore {
   private[sources] def metadataCommitWithRetry[T](path: String,
       filesOf: StoreLog.Snapshot => Seq[String] = _.files,
       dvsOf: StoreLog.Snapshot => Option[Map[String, Dv.Entry]] = _ => None)(
-      propsOf: StoreLog.Snapshot => (Map[String, String], T)): T = {
-    var attempts = 0
-    while (true) {
-      val cur = StoreLog.latest(path).getOrElse(
-        throw new IllegalArgumentException(s"no manifest at $path"))
+      propsOf: StoreLog.Snapshot => (Map[String, String], T)): T =
+    StoreTxn.empty(path).commit(StoreLog.latestVersion(path).getOrElse(
+        throw new IllegalArgumentException(s"no manifest at $path"))) { v =>
+      val cur = StoreLog.read(path, v)
       val (props, result) = propsOf(cur)
-      try {
-        StoreLog.commit(path, cur.version, Seq.empty, filesOf(cur),
-          parent = Some(cur), setProps = props, resetDvs = dvsOf(cur))
-        return result
-      } catch {
-        case c: StoreLog.CommitConflict =>
-          attempts += 1; if (attempts > 20) throw c
-      }
+      StoreLog.commit(path, cur.version, Seq.empty, filesOf(cur),
+        parent = Some(cur), setProps = props, resetDvs = dvsOf(cur))
+      result
     }
-    sys.error("unreachable")
+
+  /** One attempt of a staged APPEND against tip `curV` — the shared body
+    * of the Scala append, SQL INSERT and `graft-store` epoch commits.
+    * A branchless append is a pure addition and takes the O(commit)
+    * transform path; under an active branch it is REF-AWARE
+    * ([[refAppendBase]]: the target ref's files, its pointer advanced in
+    * the same commit). `replaceAll` makes it a versioned REPLACE of the
+    * whole store instead (INSERT OVERWRITE, Complete-mode epochs): only
+    * the new files live, and every touched partition is named in
+    * `replaced`, where concurrent writers' rebase walks look for theirs.
+    * `props` derives the commit's property changes from the parent's.
+    */
+  private[graft] def stagedAppend(txn: StoreTxn, curV: Long,
+      curProps: Map[String, String], branch: Option[String],
+      replaceAll: Boolean, tag: Option[String])(
+      props: Map[String, String] => Map[String, String]): Long = {
+    val path = txn.path
+    if (!replaceAll && branch.isEmpty &&
+        !curProps.contains(StoreLog.MainRefProp))
+      StoreLog.commitTransform(path, curV, Seq.empty,
+        removeFiles = Nil, addFiles = txn.moved,
+        addStats = txn.movedStats, addSizes = txn.movedSizes,
+        tag = tag, setProps = props(curProps))
+    else {
+      val cur = StoreLog.read(path, curV)
+      val (baseFiles, refProps, carryStats, carrySizes, dvReset) =
+        if (replaceAll)
+          (Nil, Map.empty[String, String],
+            Map.empty[String, FileStats.FileStatsMap], Map.empty[String, Long],
+            None)
+        else refAppendBase(path, cur, branch)
+      val replaced =
+        if (!replaceAll) Nil
+        else (cur.files ++ txn.moved).map { f =>
+          val i = f.lastIndexOf('/')
+          if (i > 0) f.substring(0, i) else f
+        }.distinct.sorted
+      StoreLog.commit(path, cur.version, replaced, baseFiles ++ txn.moved,
+        parent = Some(cur), addStats = carryStats ++ txn.movedStats,
+        addSizes = carrySizes ++ txn.movedSizes, tag = tag,
+        resetDvs = dvReset, setProps = props(cur.props) ++ refProps)
+    }
   }
 
   /** The ref-view base of an APPEND targeting `branch` (None = main)
@@ -3040,40 +2870,28 @@ object TsStore {
     * touched prefixes, so a stale main-side writer rebasing across the
     * published era finds the conflict in this commit's own record.
     */
-  private def branchDmlCommit(path: String, lease: StoreLog.WriterLease,
-      b: String, bv0: Long, moved: Seq[String], prefixes: Seq[String],
+  private def branchDmlCommit(txn: StoreTxn, b: String, bv0: Long,
+      prefixes: Seq[String],
       removeOf: StoreLog.Snapshot => Seq[String],
       addDvs: Map[String, Dv.Entry],
       boundChecks: Option[Seq[Constraints.Check]],
       schemaForWiden: Option[org.apache.spark.sql.types.StructType]): Long = {
-    def abort(why: String): Nothing = {
-      StoreLog.deleteDataFiles(path, moved)
-      throw new StoreLog.CommitConflict(why)
-    }
-    val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved)
-    var attempts = 0
-    while (true) {
-      lease.renew()
-      val cur = StoreLog.latest(path).getOrElse(
-        abort(s"no manifest at $path"))
-      boundChecks.foreach { bc =>
-        val added = Constraints.addedSince(bc, cur.props)
-        if (added.nonEmpty)
-          abort(s"CHECK constraint(s) ${added.map(_.name).mkString(", ")} " +
-            s"added concurrently at $path — the staged rows were never " +
-            "validated against them; re-run the write")
-      }
+    val path = txn.path
+    txn.commit(StoreLog.latestVersion(path).getOrElse(
+        txn.abort(s"no manifest at $path"))) { tipV =>
+      val cur = StoreLog.read(path, tipV)
+      boundChecks.foreach(txn.abortIfChecksAdded(_, cur.props, NotValidated))
       val bvNow = cur.props.get(StoreLog.BranchPropPrefix + b)
-        .flatMap(_.toLongOption).getOrElse(abort(
+        .flatMap(_.toLongOption).getOrElse(txn.abort(
           s"branch '$b' at $path was published or dropped mid-operation — " +
             "the staged change has no target; re-run against main or a " +
             "fresh branch"))
       if (bvNow != bv0)
-        abort(s"branch '$b' at $path moved (v$bv0 → v$bvNow) since this " +
+        txn.abort(s"branch '$b' at $path moved (v$bv0 → v$bvNow) since this " +
           "operation read its view — re-run against the new branch head")
       val bSnap = if (bvNow == cur.version) cur else StoreLog.read(path, bvNow)
       val rm = removeOf(bSnap).toSet
-      val newFiles = bSnap.files.filterNot(rm) ++ moved
+      val newFiles = bSnap.files.filterNot(rm) ++ txn.moved
       val live = newFiles.toSet
       val desired = (bSnap.dvs ++ addDvs).filter { case (f, _) => live(f) }
       val inherited = (cur.dvs ++ addDvs).filter { case (f, _) => live(f) }
@@ -3082,26 +2900,18 @@ object TsStore {
         if (bvNow == cur.version)
           (Map.empty[String, FileStats.FileStatsMap], Map.empty[String, Long])
         else (bSnap.stats, bSnap.sizes)
-      try {
-        return StoreLog.commit(path, cur.version, prefixes.sorted, newFiles,
-          parent = Some(cur),
-          addStats = carryStats ++ movedStats,
-          addSizes = carrySizes ++ movedSizes,
-          addDvs = addDvs, resetDvs = dvReset,
-          setProps = schemaForWiden.fold(Map.empty[String, String])(sc =>
-            GraftTable.widenedSchemaProp(cur.props, sc)) +
-            (StoreLog.BranchPropPrefix + b -> (cur.version + 1).toString) +
-            // branch activity: advance the age-expiry touch stamp
-            (StoreLog.BranchTouchPrefix + b ->
-              System.currentTimeMillis().toString))
-      } catch {
-        case c: StoreLog.CommitConflict =>
-          attempts += 1
-          if (attempts > 20)
-            abort(s"gave up after $attempts commit attempts at $path: ${c.getMessage}")
-      }
+      StoreLog.commit(path, cur.version, prefixes.sorted, newFiles,
+        parent = Some(cur),
+        addStats = carryStats ++ txn.movedStats,
+        addSizes = carrySizes ++ txn.movedSizes,
+        addDvs = addDvs, resetDvs = dvReset,
+        setProps = schemaForWiden.fold(Map.empty[String, String])(sc =>
+          GraftTable.widenedSchemaProp(cur.props, sc)) +
+          (StoreLog.BranchPropPrefix + b -> (cur.version + 1).toString) +
+          // branch activity: advance the age-expiry touch stamp
+          (StoreLog.BranchTouchPrefix + b ->
+            System.currentTimeMillis().toString))
     }
-    sys.error("unreachable")
   }
 
   /** Validate a ref/tag name (shared rules: tag charset, no all-digit
@@ -3232,11 +3042,12 @@ object TsStore {
     * created (diverged — like any rebase conflict) or when the audit
     * finds a violation. Returns the published (new main) version.
     */
-  def publishBranch(spark: SparkSession, path: String, name: String): Long = {
-    var attempts = 0
-    while (true) {
-      val cur = StoreLog.latest(path).getOrElse(
-        throw new IllegalArgumentException(s"no manifest at $path"))
+  def publishBranch(spark: SparkSession, path: String, name: String): Long =
+    StoreTxn.empty(path).commit(StoreLog.latestVersion(path).getOrElse(
+        throw new IllegalArgumentException(s"no manifest at $path"))) { tipV =>
+      // each retry re-reads everything: a concurrent MAIN append moves
+      // the ref and the divergence check below then refuses
+      val cur = StoreLog.read(path, tipV)
       val bv = cur.props.get(s"${StoreLog.BranchPropPrefix}$name")
         .flatMap(_.toLongOption).getOrElse(throw new IllegalArgumentException(
           s"no branch '$name' at $path"))
@@ -3292,19 +3103,9 @@ object TsStore {
       // (no `replaced` record: branch-era DML commits carry their own
       // prefix records, which is where a stale writer's rebase walk
       // finds them — the fast-forward itself replaces nothing)
-      try {
-        StoreLog.commit(path, cur.version, Seq.empty, bFiles,
-          parent = Some(cur), setProps = refs, resetDvs = dvReset)
-        return v
-      } catch {
-        case c: StoreLog.CommitConflict =>
-          // retry re-reads everything: a concurrent MAIN append moves
-          // the ref and the divergence check above then refuses
-          attempts += 1; if (attempts > 20) throw c
-      }
+      StoreLog.commit(path, cur.version, Seq.empty, bFiles,
+        parent = Some(cur), setProps = refs, resetDvs = dvReset)
     }
-    sys.error("unreachable")
-  }
 
   /** The store's live branches: name → head version. */
   def listBranches(path: String): Map[String, Long] = StoreLog.branches(path)

@@ -14,7 +14,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.{CommitIo, FileStats, GraftBatchWrite, GraftDataWriter, GraftHashedDataWriter, GraftSerializableConf, GraftWriteTaskResult, StoreLog, TsStore}
+import graft.sources.{CommitIo, GraftBatchWrite, GraftDataWriter, GraftHashedDataWriter, GraftSerializableConf, GraftWriteTaskResult, StoreLog, StoreTxn, TsStore}
 
 /** The store as a NATIVE DSv2 streaming sink — `writeStream
   * .format("graft-store")` lands micro-batches as manifest-committed
@@ -220,96 +220,44 @@ private[streaming] class GraftStreamingAppendWrite(path: String,
         // only the committed attempts' named files (see GraftBatchWrite)
         val named = messages.toSeq.collect {
           case GraftWriteTaskResult(fs) => fs }.flatten
-        var movedAny = false
-        StoreLog.withWriterLease(path) { lease =>
-          val moved =
-            try StoreLog.adoptStagedNamed(path, staging, named)
-            finally StoreLog.deleteStaging(staging)
-          movedAny = moved.nonEmpty
-          if (moved.nonEmpty) {
-            val (movedStats, movedSizes) = FileStats.forFilesWithSizes(path, moved)
-            var committed = false
-            var attempts = 0
-            while (!committed) {
-              lease.renew()
-              val curV = StoreLog.latestVersion(path).get // ensured at start
+        val movedAny = StoreTxn.staged(path, staging, Some(named)) { txn =>
+          txn.moved.nonEmpty && txn.commit(
+              StoreLog.latestVersion(path).get) { curV => // ensured at start
+            // ZOMBIE-DRIVER race: a replacement driver may have
+            // committed THIS epoch between our findTag check and a lost
+            // CAS — re-check the tag before retrying, and drop our
+            // now-redundant files if it landed
+            if (txn.retrying && !replaceAll &&
+                StoreLog.findTag(path, tag).isDefined) {
+              StoreLog.deleteDataFiles(path, txn.moved)
+              false
+            } else {
               val curProps = StoreLog.propsAt(path, curV)
               // a CHECK constraint added since this epoch's writers
               // bound their guard set: the staged rows were never
               // validated against it — fail the epoch (the restarted
               // query rebinds and replays the source)
-              val addedChecks = graft.sources.Constraints
-                .addedSince(epochBound, curProps)
-              if (addedChecks.nonEmpty) {
-                StoreLog.deleteDataFiles(path, moved)
-                throw new StoreLog.CommitConflict(
-                  s"CHECK constraint(s) ${addedChecks.map(_.name).mkString(", ")} " +
-                    s"added concurrently at $path — epoch $epochId aborted")
-              }
+              txn.abortIfChecksAdded(epochBound, curProps,
+                s"epoch $epochId aborted")
               // Complete-mode epochs REPLACE the store (versioned, like
               // INSERT OVERWRITE); append epochs are pure REF-AWARE
               // additions (a branch-targeted epoch reads the branch
               // head's files and advances the branch pin in its commit)
               // and take the O(commit) transform path when branchless
-              if (replaceAll && curProps.contains(StoreLog.MainRefProp)) {
-                StoreLog.deleteDataFiles(path, moved)
-                throw new IllegalStateException(
+              if (replaceAll && curProps.contains(StoreLog.MainRefProp))
+                txn.refuse(new IllegalStateException(
                   s"store at $path has open branch(es) — Complete-mode " +
                     "epochs replace the store and refuse while a branch " +
-                    "is open")
+                    "is open"))
+              // the tag guards the APPEND path's exactly-once; the
+              // hashed epoch writer lands rows in ARRIVAL order — the
+              // store's layout-order contract is gone
+              TsStore.stagedAppend(txn, curV, curProps, branch, replaceAll,
+                  tag = if (replaceAll) None else Some(tag)) { parent =>
+                graft.sources.GraftTable.widenedSchemaProp(parent, writeSchema) +
+                  (graft.sources.GraftTable.LayoutSortedProp -> "false")
               }
-              try {
-                if (!replaceAll && branch.isEmpty &&
-                    !curProps.contains(StoreLog.MainRefProp))
-                  StoreLog.commitTransform(path, curV, Seq.empty,
-                    removeFiles = Nil, addFiles = moved,
-                    addStats = movedStats, addSizes = movedSizes,
-                    tag = Some(tag),
-                    setProps = graft.sources.GraftTable
-                      .widenedSchemaProp(curProps, writeSchema) +
-                      (graft.sources.GraftTable.LayoutSortedProp -> "false"))
-                else {
-                  val cur = StoreLog.read(path, curV)
-                  val (baseFiles, refProps, carryStats, carrySizes, dvReset) =
-                    if (replaceAll)
-                      (cur.files, Map.empty[String, String],
-                        Map.empty[String, FileStats.FileStatsMap],
-                        Map.empty[String, Long],
-                        Option.empty[Map[String, graft.sources.Dv.Entry]])
-                    else TsStore.refAppendBase(path, cur, branch)
-                  val (replaced, files) =
-                    if (replaceAll)
-                      ((cur.files ++ moved).map { f =>
-                        val i = f.lastIndexOf('/')
-                        if (i > 0) f.substring(0, i) else f
-                      }.distinct.sorted, moved)
-                    else (Seq.empty[String], baseFiles ++ moved)
-                  StoreLog.commit(path, cur.version, replaced, files,
-                    parent = Some(cur), addStats = carryStats ++ movedStats,
-                    addSizes = carrySizes ++ movedSizes,
-                    resetDvs = dvReset,
-                    tag = if (replaceAll) None else Some(tag),
-                    setProps = graft.sources.GraftTable
-                      .widenedSchemaProp(cur.props, writeSchema) ++ refProps +
-                      // the hashed epoch writer lands rows in ARRIVAL
-                      // order — the store's layout-order contract is gone
-                      (graft.sources.GraftTable.LayoutSortedProp -> "false"))
-                }
-                committed = true
-              } catch {
-                case c: StoreLog.CommitConflict =>
-                  // ZOMBIE-DRIVER race: a replacement driver may have
-                  // committed THIS epoch between our findTag check and
-                  // the CAS — re-check the tag before retrying, and
-                  // drop our now-redundant files if it landed
-                  if (!replaceAll && StoreLog.findTag(path, tag).isDefined) {
-                    StoreLog.deleteDataFiles(path, moved)
-                    movedAny = false
-                    committed = true
-                  } else {
-                    attempts += 1; if (attempts > 50) throw c
-                  }
-              }
+              true
             }
           }
         }

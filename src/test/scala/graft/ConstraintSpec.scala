@@ -327,64 +327,84 @@ class ConstraintSpec extends AnyFunSuite {
   }
 
   test("append racing a concurrent ADD CONSTRAINT aborts — unchecked rows never land") {
-    import org.apache.spark.sql.SaveMode
-    val dir = Files.createTempDirectory("graft_ck_race").toString
-    TsStore.write(events.select(cols.map(col): _*).filter(col("value") >= 0),
-      dir, tsCol = "ts", uidCols = Seq("event_type"))
-    StoreLog.ensure(dir)
-    // an append whose source lineage BLOCKS mid-write: the writer binds
-    // its (empty) constraint set at entry, its first pre-write job
-    // signals `started` and parks on `gate` — the deterministic window
-    // in which the ALTER ADD lands. Without the commit-time addedSince
-    // recheck, the unblocked append would then CAS-commit a violating
-    // row AFTER the constraint's whole-table certification.
-    val started = new java.util.concurrent.CountDownLatch(1)
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    ConstraintRaceGate.started.set(started)
-    ConstraintRaceGate.gate.set(gate)
-    val block = udf((v: Double) => ConstraintRaceGate.hit(v))
-    val bad = Seq((990101L, java.sql.Timestamp.valueOf("2032-01-01 00:00:00"),
-      1L, "view", -7.0)).toDF(cols: _*)
-      .withColumn("value", block(col("value")))
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    try {
-      val fut = pool.submit(new java.util.concurrent.Callable[Throwable] {
-        override def call(): Throwable =
-          try {
-            TsStore.write(bad, dir, tsCol = "ts", uidCols = Seq("event_type"),
-              mode = SaveMode.Append,
-              overlapPolicy = TsStore.OverlapPolicy.Allow)
-            null
-          } catch { case t: Throwable => t }
+    import org.apache.spark.sql.{DataFrame, SaveMode}
+    // one race per append door: the Scala `TsStore.write` append and the
+    // SQL `INSERT INTO` on a catalog table (the native DSv2 writer)
+    val doors: Seq[(String, () => (String, DataFrame => Unit))] = Seq(
+      "TsStore.write" -> { () =>
+        val dir = Files.createTempDirectory("graft_ck_race").toString
+        TsStore.write(events.select(cols.map(col): _*).filter(col("value") >= 0),
+          dir, tsCol = "ts", uidCols = Seq("event_type"))
+        StoreLog.ensure(dir)
+        (dir, (bad: DataFrame) =>
+          TsStore.write(bad, dir, tsCol = "ts", uidCols = Seq("event_type"),
+            mode = SaveMode.Append,
+            overlapPolicy = TsStore.OverlapPolicy.Allow))
+      },
+      "INSERT INTO" -> { () =>
+        val (t, dir) = freshTable("")
+        (dir, (bad: DataFrame) => {
+          bad.createOrReplaceTempView("ck_race_src")
+          spark.sql(s"INSERT INTO $t SELECT * FROM ck_race_src")
+          ()
+        })
       })
-      assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the append never started evaluating its write lineage")
-      // the ALTER: committed rows are all clean, so the existing-data
-      // scan certifies the invariant (staged files are invisible), and
-      // the props commit lands while the append is parked
-      Constraints.validateAdd(spark, dir,
-        events.select(cols.map(col): _*).schema,
-        Constraints.Check("vpos", "value >= 0"))
-      val cur = StoreLog.latest(dir).get
-      StoreLog.commit(dir, cur.version, Seq.empty, cur.files,
-        parent = Some(cur), setProps = Map("constraint.vpos" -> "value >= 0"))
-      gate.countDown()
-      val err = fut.get(120, java.util.concurrent.TimeUnit.SECONDS)
-      assert(err != null, "the racing append must NOT commit")
-      val msg = Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
-        .map(_.getMessage).filter(_ != null).mkString(" | ")
-      assert(msg.contains("added concurrently") && msg.contains("vpos"),
-        s"wanted the concurrent-ADD abort, got: $msg")
-      // the invariant the ALTER certified actually holds...
-      assert(TsStore.load(spark, dir).filter(col("value") < 0).count() === 0L)
-      // ...and the abort cleaned up its adopted files (no orphans)
-      assert(StoreLog.listDataFiles(dir).toSet ===
-        StoreLog.latest(dir).get.files.toSet)
-    } finally {
-      gate.countDown() // never leave the worker parked on failure
-      pool.shutdownNow()
-      ConstraintRaceGate.started.set(null)
-      ConstraintRaceGate.gate.set(null)
+    doors.foreach { case (door, setup) =>
+      val (dir, append) = setup()
+      // an append whose source lineage BLOCKS mid-write: the writer binds
+      // its (empty) constraint set at entry, its first job over the
+      // source signals `started` and parks on `gate` — the deterministic
+      // window in which the ALTER ADD lands. Without the commit-time
+      // addedSince recheck, the unblocked append would then CAS-commit a
+      // violating row AFTER the constraint's whole-table certification.
+      val started = new java.util.concurrent.CountDownLatch(1)
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      ConstraintRaceGate.started.set(started)
+      ConstraintRaceGate.gate.set(gate)
+      val block = udf((v: Double) => ConstraintRaceGate.hit(v))
+      // a Range source (not a local relation) so no optimizer rule
+      // evaluates the blocking UDF before the write binds its checks
+      val bad = spark.range(1).select(lit(990101L).as("event_id"),
+          lit(java.sql.Timestamp.valueOf("2032-01-01 00:00:00")).as("ts"),
+          lit(1L).as("user_id"), lit("view").as("event_type"),
+          (col("id") - 7).cast("double").as("value"))
+        .withColumn("value", block(col("value")))
+      val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+      try {
+        val fut = pool.submit(new java.util.concurrent.Callable[Throwable] {
+          override def call(): Throwable =
+            try { append(bad); null } catch { case t: Throwable => t }
+        })
+        assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          s"$door: the append never started evaluating its write lineage")
+        // the ALTER: committed rows are all clean, so the existing-data
+        // scan certifies the invariant (staged files are invisible), and
+        // the props commit lands while the append is parked
+        Constraints.validateAdd(spark, dir,
+          events.select(cols.map(col): _*).schema,
+          Constraints.Check("vpos", "value >= 0"))
+        val cur = StoreLog.latest(dir).get
+        StoreLog.commit(dir, cur.version, Seq.empty, cur.files,
+          parent = Some(cur), setProps = Map("constraint.vpos" -> "value >= 0"))
+        gate.countDown()
+        val err = fut.get(120, java.util.concurrent.TimeUnit.SECONDS)
+        assert(err != null, s"$door: the racing append must NOT commit")
+        val msg = Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+          .map(_.getMessage).filter(_ != null).mkString(" | ")
+        assert(msg.contains("added concurrently") && msg.contains("vpos"),
+          s"$door: wanted the concurrent-ADD abort, got: $msg")
+        // the invariant the ALTER certified actually holds...
+        assert(TsStore.load(spark, dir).filter(col("value") < 0).count() === 0L,
+          door)
+        // ...and the abort cleaned up its adopted files (no orphans)
+        assert(StoreLog.listDataFiles(dir).toSet ===
+          StoreLog.latest(dir).get.files.toSet, door)
+      } finally {
+        gate.countDown() // never leave the worker parked on failure
+        pool.shutdownNow()
+        ConstraintRaceGate.started.set(null)
+        ConstraintRaceGate.gate.set(null)
+      }
     }
   }
 
