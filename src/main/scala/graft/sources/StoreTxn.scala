@@ -26,7 +26,7 @@ package graft.sources
   * EMPTY `moved`: its abort must never delete committed files.
   */
 private[graft] final class StoreTxn(val path: String,
-    lease: Option[StoreLog.WriterLease], val moved: Seq[String],
+    val lease: Option[StoreLog.WriterLease], val moved: Seq[String],
     digestCols: Option[Seq[String]] = None) {
 
   val (movedStats, movedSizes): (Map[String, FileStats.FileStatsMap],

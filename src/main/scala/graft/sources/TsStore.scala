@@ -579,7 +579,7 @@ object TsStore {
     "the staged rows were never validated against them; re-run the write"
 
   /** The MAINTENANCE-rewrite commit ([[compactPartitions]] / [[zorder]]):
-    * swap `targets` (live files of the MAIN view) for `moved`. With no
+    * swap `targets` (live files of the MAIN view) for `txn.moved`. With no
     * branch open this is the streamed transform scaffold
     * ([[commitTransformWithRebase]], O(commit footprint)). Under open
     * branches the rewrite may still proceed — nightly compaction must
@@ -609,12 +609,11 @@ object TsStore {
     * Under branches the commit pays O(view) driver lists like every
     * other branch verb; branchless stores keep the streamed path.
     */
-  private[sources] def commitMaintenanceRewrite(path: String,
-      lease: StoreLog.WriterLease, baseViewV: Long, moved: Seq[String],
-      replaced: Seq[String], targets: Seq[String],
+  private[sources] def commitMaintenanceRewrite(txn: StoreTxn,
+      baseViewV: Long, replaced: Seq[String], targets: Seq[String],
       extraProps: Map[String, String] = Map.empty,
       tag: Option[String] = None): Long = {
-    val txn = new StoreTxn(path, Some(lease), moved)
+    val path = txn.path
     val tipV0 = StoreLog.latestVersion(path)
       .getOrElse(txn.abort(s"no manifest at $path"))
     if (!StoreLog.propsAt(path, tipV0).contains(StoreLog.MainRefProp))
@@ -674,7 +673,7 @@ object TsStore {
             s"($overlap of ${targets.size} files shared) — publish or " +
             "drop it first")
       }
-      val newMain = mSnap.files.filterNot(targetSet) ++ moved
+      val newMain = mSnap.files.filterNot(targetSet) ++ txn.moved
       val live = newMain.toSet
       val desired = mSnap.dvs.filter { case (f, _) => live(f) }
       val inherited = cur.dvs.filter { case (f, _) => live(f) }
@@ -708,7 +707,7 @@ object TsStore {
           (StoreLog.MainRefProp -> v.toString)), plans)
     }
     plans.foreach { case (b, bv, rebase) =>
-      if (rebase) rebaseBranchPin(lease, txn, b, bv, targetSet)
+      if (rebase) rebaseBranchPin(txn, b, bv, targetSet)
     }
     committed
   }
@@ -723,11 +722,11 @@ object TsStore {
     * vacuum-live through its pin), and a CAS storm gives up quietly —
     * correctness never depends on this commit.
     */
-  private def rebaseBranchPin(lease: StoreLog.WriterLease, main: StoreTxn,
-      b: String, bv0: Long, targetSet: Set[String]): Unit = {
+  private def rebaseBranchPin(main: StoreTxn, b: String, bv0: Long,
+      targetSet: Set[String]): Unit = {
     val path = main.path
     StoreLog.latestVersion(path).foreach { tipV0 =>
-      try StoreTxn.empty(path, Some(lease)).commit(tipV0) { tipV =>
+      try StoreTxn.empty(path, main.lease).commit(tipV0) { tipV =>
         val cur = StoreLog.read(path, tipV)
         if (cur.props.get(StoreLog.BranchPropPrefix + b)
             .flatMap(_.toLongOption).contains(bv0)) {
@@ -1390,8 +1389,8 @@ object TsStore {
   /** Per-column deleted-null counts + deleted-row bounds for a delta
     * DML commit's FRESH positions, computed FROM THE FILES THEMSELVES
     * at commit time: one distributed pass over the touched files'
-    * stat-capped columns, positions joined from the adopted fragment
-    * sidecars. The delta WRITERS cannot record these from the rows
+    * stat-capped columns, kept to the adopted fragment sidecars'
+    * positions. The delta WRITERS cannot record these from the rows
     * they see — Spark's delta plans project the POST-ASSIGNMENT values
     * (an UPDATE assigning a stat column hands the writer the NEW
     * value, verified empirically), and recording those would let a
@@ -1411,37 +1410,19 @@ object TsStore {
       : Map[String, (Map[String, Long], Map[String, Dv.Bound])] = {
     if (fragsByFile.isEmpty) return Map.empty
     val conf = spark.sparkContext.hadoopConfiguration
-    val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
     import spark.implicits._
     val files = fragsByFile.keys.toSeq.sorted
-    val fidOf: Map[String, Int] = files.zipWithIndex.toMap
     val relOfUri: Map[String, String] =
       files.map(f => Dv.absUri(conf, path, f) -> f).toMap
-    val posDf = spark.createDataset(
-        fragsByFile.toSeq.map { case (f, (frags, _)) => (fidOf(f), frags) })
-      .flatMap { case (fid, frags) =>
-        frags.iterator.flatMap(p => Dv.read(sconf.value, p).iterator)
-          .map(p => (fid, p)) }
-      .toDF("__dv_fid", "__dv_pos")
-    val fidDf = files.map(f => (Dv.absUri(conf, path, f), fidOf(f)))
-      .toDF("__uri", "__jfid")
     // the PRE-commit live view of the touched files: old vectors are
     // subtracted by readFilesDv, and this commit's fresh positions are
     // disjoint from them by construction (the operation scanned only
     // live rows)
-    val df0 = readFilesDv(spark, path, base, files, mergeSchema = true,
+    val live = readFilesDv(spark, path, base, files, mergeSchema = true,
       keepMeta = true)
-    val totalFresh = fragsByFile.valuesIterator.map(_._2).sum
-    val capBytes = spark.conf.getOption("spark.graft.dv.broadcastBytes")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
-    val posSide = if (totalFresh * 24L <= capBytes) broadcast(posDf) else posDf
-    val joined = df0
-      .join(broadcast(fidDf), df0("__file") === col("__uri"), "inner")
-      .drop("__uri")
-      .join(posSide, col("__jfid") === col("__dv_fid") &&
-        col("__pos") === col("__dv_pos"), "inner")
-      .drop("__jfid", "__dv_fid", "__dv_pos")
-    val (ds, tags) = dvStatSelect(joined)
+    val fresh = dvPositionFilter(spark, path, live,
+      relOfUri.map { case (uri, f) => uri -> fragsByFile(f)._1 }, keep = true)
+    val (ds, tags) = dvStatSelect(fresh)
     val got: Map[String, DvStatRaw] =
       ds.groupByKey(_._1).mapGroups { (uri, it) =>
         val acc = new DvStatAcc
@@ -1680,16 +1661,13 @@ object TsStore {
         .sortWithinPartitions(rangeCols: _*),
       staging, uidCols, SaveMode.Overwrite, codec, rowGroupBytes,
       maxRecordsPerFile, base.bloomCols)
-    StoreLog.withWriterLease(path) { lease =>
-      val moved =
-        try StoreLog.adoptStaged(path, staging)
-        finally StoreLog.deleteStaging(staging)
-      // maintenance commit: swap exactly the targets for the rewrite —
-      // branchless, the streamed transform (no parent file list on any
-      // attempt; an intervening REPLACE of a touched prefix aborts,
-      // appends serialize); under open branches, the disjointness-
-      // proved rewrite with branch-pin rebase.
-      commitMaintenanceRewrite(path, lease, base.version, moved,
+    // maintenance commit: swap exactly the targets for the rewrite —
+    // branchless, the streamed transform (no parent file list on any
+    // attempt; an intervening REPLACE of a touched prefix aborts,
+    // appends serialize); under open branches, the disjointness-
+    // proved rewrite with branch-pin rebase.
+    StoreTxn.staged(path, staging) { txn =>
+      commitMaintenanceRewrite(txn, base.version,
         replaced = touched, targets = targets)
     }
   }
@@ -2164,10 +2142,7 @@ object TsStore {
     val staging = txnDir(path)
     writeFiles(clustered, staging, uidCols, SaveMode.Overwrite, codec,
       rowGroupBytes, maxRecordsPerFile, base.bloomCols)
-    StoreLog.withWriterLease(path) { lease =>
-      val moved =
-        try StoreLog.adoptStaged(path, staging)
-        finally StoreLog.deleteStaging(staging)
+    StoreTxn.staged(path, staging) { txn =>
       // transform commit: swap exactly the targets for the clustered
       // rewrite — O(rewrite footprint) on every attempt, no parent file
       // list. Conflict rules unchanged: an intervening commit REPLACING
@@ -2182,7 +2157,7 @@ object TsStore {
           Map(ClusterColsProp -> clusterCols.mkString(","),
             ClusterVersionProp -> base.version.toString)
         else Map.empty[String, String]
-      commitMaintenanceRewrite(path, lease, base.version, moved,
+      commitMaintenanceRewrite(txn, base.version,
         replaced = prefixes, targets = targetFiles,
         tag = Some(clusterTag(clusterCols)),
         // z-clustered files are ordered by the interleave rank, NOT by
@@ -2357,7 +2332,7 @@ object TsStore {
         // insert/update/delete (+preimage) branches below fan `n` and
         // `o` into up to six join inputs, and each branch would
         // otherwise replay its side's whole readFilesDv lineage (file
-        // scan + dv anti-join) AND carry a duplicated subtree through
+        // scan + dv filter) AND carry a duplicated subtree through
         // the optimizer — measured ~0.9 s of driver-side PLANNING per
         // MatView refresh before the pin, plus the repeated scans. Both
         // sides are bounded by the window's commit footprint, never the
@@ -2393,21 +2368,6 @@ object TsStore {
     }
   }
 
-  /** Read `files` of the store at `snap`, applying any DELETION VECTORS
-    * the snapshot associates with them — the one chokepoint every
-    * internal DataFrame read rides, so a vectored row can never
-    * resurrect through a rewrite, a CDC diff, or a maintenance pass.
-    *
-    * Clean files stream through the ordinary parquet scan (columnar,
-    * pushdown intact). Vectored files additionally read Spark's
-    * `_metadata` (file_path, row_index) and LEFT ANTI join the deleted
-    * (file, position) set — built DISTRIBUTED from the sidecars, and
-    * broadcast while the manifest-recorded total stays small, so the
-    * data side neither shuffles nor loses its columnar scan. Join keys
-    * use [[Dv.absUri]]'s rendering of each file (pinned equal to
-    * `_metadata.file_path` in DvSpec, escaped partition values
-    * included).
-    */
   /** The conservative may-match keep for `pred` over a version's
     * files: footer stats PLUS partition pseudo-stats (from the declared
     * schema when one exists — partition columns never appear in footer
@@ -2540,6 +2500,23 @@ object TsStore {
       }
     }
 
+  /** Read `files` of the store at `snap`, applying any DELETION VECTORS
+    * the snapshot associates with them — the one chokepoint every
+    * internal DataFrame read rides, so a vectored row can never
+    * resurrect through a rewrite, a CDC diff, or a maintenance pass.
+    *
+    * Clean files stream through the ordinary parquet scan (columnar,
+    * pushdown intact, no metadata columns). Vectored files additionally
+    * read Spark's `_metadata` (file_path, row_index) and pass the
+    * executor-side [[dvPositionFilter]]: each task loads a file's
+    * sidecar once and drops its positions by binary search, the same
+    * kernel the DSv2 scan uses — no join, no exchange, no driver-side
+    * copy of the deleted positions. Files are keyed by [[Dv.absUri]]'s
+    * rendering (pinned equal to `_metadata.file_path` in DvSpec,
+    * escaped partition values included); a scanned file the rendering
+    * misses fails the read rather than silently keeping deleted rows.
+    * `keepMeta` keeps the `__file`/`__pos` columns on every file.
+    */
   private[graft] def readFilesDv(spark: SparkSession, path: String,
       snap: StoreLog.Snapshot, files: Seq[String],
       mergeSchema: Boolean, keepMeta: Boolean = false): DataFrame = {
@@ -2558,66 +2535,38 @@ object TsStore {
     def withMetaCols(df: DataFrame) = df
       .withColumn("__file", col("_metadata.file_path"))
       .withColumn("__pos", col("_metadata.row_index"))
-    val dvd = files.filter(snap.dvs.contains)
+    val (dvd, clean) = files.partition(snap.dvs.contains)
     if (dvd.isEmpty)
       return if (keepMeta) withMetaCols(plain(files)) else plain(files)
-    val clean = files.filterNot(snap.dvs.contains)
     val conf = spark.sparkContext.hadoopConfiguration
-    val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
-    import spark.implicits._
-    // Integer file ids keep the anti-join's build side COMPACT: the
-    // broadcast rows carry (int fid, long pos) — ~20 B of unsafe row —
-    // instead of repeating each file's full absolute URI string per
-    // deleted position (hundreds of MB at the old 4M-row cap). The
-    // uri→fid attach is a broadcast of dvd.size TINY rows on the data
-    // side, which keeps the parquet scan columnar and shuffle-free.
-    val fidOf: Map[String, Int] = dvd.zipWithIndex.toMap
-    val dvList: Seq[(Int, String)] =
-      dvd.map(f => (fidOf(f), s"$path/${snap.dvs(f).path}"))
-    val posDf = spark.createDataset(dvList)
-      .flatMap { case (fid, dvAbs) =>
-        Dv.read(sconf.value, dvAbs).map(p => (fid, p)) }
-      .toDF("__dv_fid", "__dv_pos")
-    val fidDf = dvd.map(f => (Dv.absUri(conf, path, f), fidOf(f)))
-      .toDF("__uri", "__fid")
-    val withMeta = withMetaCols(plain(dvd))
-    // LEFT join + loud null-fid guard, not an inner join: if the scan's
-    // `_metadata.file_path` rendering ever diverged from [[Dv.absUri]]
-    // (the exact divergence the delete path guards with
-    // IllegalStateException), an inner join would silently DROP every
-    // live row of that file — strictly worse than the old anti-join's
-    // resurrect-deleted-rows failure mode. The guard rides the join key
-    // itself (evaluated per row, never pruned away), so divergence
-    // fails the read instead of corrupting it.
-    val withFid = withMeta
-      .join(broadcast(fidDf), withMeta("__file") === fidDf("__uri"), "left")
-      .withColumn("__fid",
-        when(col("__fid").isNotNull, col("__fid"))
-          .otherwise(raise_error(concat(
-            lit("graft dv read: scan file "), col("__file"),
-            lit(s" matches no vectored file of $path — Dv.absUri rendering " +
-              "diverged from the scan's")))))
-      .drop("__uri")
-    // the dv side's exact cardinality is manifest metadata — broadcast
-    // while the ESTIMATED BYTES fit under a configurable cap (default
-    // 32 MB ≈ 1.3M positions at ~24 B/row), shuffle a genuinely huge
-    // backlog (which is compaction's cue anyway) — never a fixed row
-    // count that can silently OOM the driver
-    val totalDvRows = dvd.iterator.map(f => snap.dvs(f).rows).sum
-    val capBytes = spark.conf.getOption("spark.graft.dv.broadcastBytes")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
-    val dvSide =
-      if (totalDvRows * 24L <= capBytes) broadcast(posDf) else posDf
-    val filtered0 = withFid.join(dvSide,
-        withFid("__fid") === dvSide("__dv_fid") &&
-          withFid("__pos") === dvSide("__dv_pos"), "left_anti")
-      .drop("__fid")
-    val filtered = if (keepMeta) filtered0 else filtered0.drop("__file", "__pos")
+    val vectors = dvd.map(f =>
+      Dv.absUri(conf, path, f) -> Seq(s"$path/${snap.dvs(f).path}")).toMap
+    val live = dvPositionFilter(spark, path, withMetaCols(plain(dvd)),
+      vectors, keep = false)
+    val filtered = if (keepMeta) live else live.drop("__file", "__pos")
     if (clean.isEmpty) filtered
     else {
       val cleanDf = if (keepMeta) withMetaCols(plain(clean)) else plain(clean)
       cleanDf.unionByName(filtered, allowMissingColumns = true)
     }
+  }
+
+  /** Filter `df`'s (`__file`, `__pos`) rows by deletion-vector
+    * positions on the executors. `vectors` maps a file's scan-rendered
+    * uri ([[Dv.absUri]]) to its sidecars' absolute paths; several
+    * sidecars (a delta commit's fragments) are read as their sorted
+    * union. `keep = false` drops the listed positions and fails on a
+    * scanned file the map misses; `keep = true` keeps only the listed
+    * positions (a file the map misses keeps nothing).
+    */
+  private def dvPositionFilter(spark: SparkSession, path: String,
+      df: DataFrame, vectors: Map[String, Seq[String]],
+      keep: Boolean): DataFrame = {
+    val sconf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    val test = udf(new DvPositions(path, vectors, keep, sconf))
+      .withName("graft_dv_positions")
+    df.filter(test(col("__file"), col("__pos")))
   }
 
   /** Manifest-aware dataset load: a logged store reads exactly the live
@@ -3173,4 +3122,39 @@ object TsStore {
            min(col(tsCol)).as("ts_min"),
            max(col(tsCol)).as("ts_max"))
       .orderBy(col(uidCol))
+}
+
+/** The per-row test behind [[TsStore.dvPositionFilter]]. Spark
+  * deserializes the filter once per task, so each task loads a file's
+  * positions ([[Dv.read]]) the first time it sees the file and tests
+  * every later row with [[Dv.contains]].
+  */
+private final class DvPositions(path: String,
+    vectors: Map[String, Seq[String]], keep: Boolean,
+    sconf: org.apache.spark.util.SerializableConfiguration)
+  extends ((String, Long) => Boolean) with Serializable {
+
+  @transient private lazy val loaded =
+    new java.util.HashMap[String, Array[Long]]()
+
+  def apply(file: String, pos: Long): Boolean = {
+    var positions = loaded.get(file)
+    if (positions == null) {
+      positions = load(file)
+      loaded.put(file, positions)
+    }
+    Dv.contains(positions, pos) == keep
+  }
+
+  private def load(file: String): Array[Long] = vectors.get(file) match {
+    case Some(Seq(one)) => Dv.read(sconf.value, one)
+    case Some(many) =>
+      val all = many.flatMap(Dv.read(sconf.value, _)).toArray
+      java.util.Arrays.sort(all)
+      all
+    case None if keep => Array.emptyLongArray
+    case None => throw new IllegalStateException(
+      s"graft dv read: scan file $file matches no vectored file of $path — " +
+        "Dv.absUri rendering diverged from the scan's")
+  }
 }

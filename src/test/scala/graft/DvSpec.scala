@@ -36,7 +36,7 @@ class DvSpec extends AnyFunSuite {
 
   test("Dv.absUri renders exactly what the scan's _metadata.file_path carries") {
     // escaped partition value (space + colon) — the rendering contract
-    // the anti-join and the delete's uri→rel mapping both stand on
+    // the dv read filter and the delete's uri→rel mapping both stand on
     val dir = Files.createTempDirectory("graft_dvuri").toString
     val df = Seq(("k 1:a", 1L), ("k 1:a", 2L), ("plain", 3L))
       .toDF("uid", "v")
@@ -124,6 +124,54 @@ class DvSpec extends AnyFunSuite {
       "the cow rewrite replaced every vectored file; vectors must drop with them")
     val want = events.filter(col("event_id") % 4 >= 2).count()
     assert(TsStore.load(spark, dir).count() === want)
+  }
+
+  test("internal vectored reads plan no join and no broadcast; rows equal the cow twin's") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    // rows of `df`, after checking its executed plan holds no join and
+    // no broadcast exchange
+    def rowsOf(df: DataFrame): Seq[String] = {
+      val q = df.select(cols.map(col): _*)
+      val rows = q.collect().map(_.toString).sorted.toSeq
+      val plan = nodes(q.queryExecution.executedPlan)
+      assert(!plan.exists(n => n.isInstanceOf[BaseJoinExec] ||
+        n.isInstanceOf[BroadcastExchangeExec]),
+        s"a vectored internal read must plan no join and no broadcast:\n" +
+          q.queryExecution.executedPlan)
+      rows
+    }
+    val dvDir = freshStore(); val cowDir = freshStore()
+    val pred = col("event_type") === "click" && col("event_id") % 3 === 0
+    TsStore.deleteVectors(spark, dvDir, pred)
+    TsStore.delete(spark, cowDir, pred, tsCol = "ts", uidCols = Seq("event_type"))
+    val snap = StoreLog.latest(dvDir).get
+    assert(snap.dvs.nonEmpty)
+    assert(rowsOf(TsStore.load(spark, dvDir)) ===
+      TsStore.load(spark, cowDir).select(cols.map(col): _*).collect()
+        .map(_.toString).sorted.toSeq)
+    // compaction's read of the vectored prefix (the call
+    // compactPartitions makes), then the compaction itself
+    val prefix = "event_type=click"
+    val targets = snap.files.filter(_.startsWith(prefix + "/"))
+    assert(targets.exists(snap.dvs.contains))
+    val cowClick = TsStore.load(spark, cowDir).filter(col("event_type") === "click")
+      .select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    assert(rowsOf(TsStore.readFilesDv(spark, dvDir, snap, targets,
+      mergeSchema = true)) === cowClick)
+    TsStore.compactPartitions(spark, dvDir, Seq(prefix),
+      tsCol = "ts", uidCols = Seq("event_type"))
+    assert(!StoreLog.latest(dvDir).get.dvs.keys.exists(_.startsWith(prefix + "/")))
+    assert(rowsOf(TsStore.load(spark, dvDir).filter(col("event_type") === "click"))
+      === cowClick)
   }
 
   test("compaction materializes vectors: rows preserved, vectors gone") {
@@ -900,6 +948,25 @@ class DvSpec extends AnyFunSuite {
     spark.sql("UPDATE gdvold.ns.t SET tag = NULL WHERE event_id <= 109")
     assert(spark.sql("SELECT count(tag) FROM gdvold.ns.t").head().getLong(0)
       === 990L)
+    // that second UPDATE lands on the file the first one vectored: the
+    // stat read-back subtracts the OLD vector and keeps only the FRESH
+    // positions, and the merged entry describes all 20 deleted rows —
+    // old tags s1090..s1099 and s0100..s0109, none of them null
+    val snap2 = StoreLog.latest(s"$root/ns/t").get
+    val grown = snap2.dvs.filter { case (f, e) =>
+      snap.dvs.get(f).exists(_.rows < e.rows) }
+    assert(grown.nonEmpty,
+      s"the second UPDATE must land on an already-vectored file: ${snap2.dvs}")
+    assert(snap2.dvs.values.map(_.rows).sum === 20L)
+    grown.values.foreach { e =>
+      assert(e.rows === 20L)
+      assert(e.nulls.get("tag") === Some(0L), s"deleted-null counts: ${e.nulls}")
+      assert(e.bounds.get("tag") === Some(Dv.Bound("s", Some("s0100"), Some("s1099"))),
+        s"deleted-tag bounds: ${e.bounds}")
+      val ids = e.bounds.get("event_id")
+      assert(ids.map(b => (b.lo.map(_.toString), b.hi.map(_.toString))) ===
+        Some((Some("100"), Some("1099"))), s"deleted-id bounds: ${e.bounds}")
+    }
   }
 
   test("dv.compact.ratio auto-compacts on SQL DML commits crossing the density") {

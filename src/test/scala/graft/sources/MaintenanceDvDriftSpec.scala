@@ -43,9 +43,9 @@ class MaintenanceDvDriftSpec extends AnyFunSuite {
     Files.copy(new java.io.File(dir, clickFiles.head).toPath, dst.toPath)
     val e = intercept[StoreLog.CommitConflict] {
       StoreLog.withWriterLease(dir) { lease =>
-        TsStore.commitMaintenanceRewrite(dir, lease, baseViewV = v1,
-          moved = Seq(moved), replaced = Seq("event_type=click"),
-          targets = clickFiles)
+        TsStore.commitMaintenanceRewrite(
+          new StoreTxn(dir, Some(lease), Seq(moved)), baseViewV = v1,
+          replaced = Seq("event_type=click"), targets = clickFiles)
       }
     }
     assert(e.getMessage.contains("deletion vectors changed"), e.getMessage)
